@@ -171,18 +171,14 @@ def _sparse_margins(
     per-round constant K (64-element dot product); the bias folds in as
     another constant. Every sum is int64 over the same addends regrouped
     — bit-identical to the dense formulation by the associativity of
-    integer addition (no floats anywhere)."""
-    consts = (
-        stats.join(w, "bucket")
-        .agg(
-            F.coalesce(F.sum(F.col("w") * F.col("S")), F.lit(0))
-            .cast("bigint")
-            .alias("K"),
-            F.coalesce(F.max("N"), F.lit(0)).cast("bigint").alias("N"),
-        )
-        .crossJoin(
-            w.where(F.col("bucket") == BIAS_BUCKET).select(F.col("w").alias("wb"))
-        )
+    integer addition (no floats anywhere). A weight frame without the
+    bias row scores with ``w_bias = 0``."""
+    consts = w.join(stats, "bucket", "left").agg(
+        F.coalesce(F.sum(F.col("w") * F.col("S")), F.lit(0)).cast("bigint").alias("K"),
+        F.coalesce(F.max("N"), F.lit(0)).cast("bigint").alias("N"),
+        F.coalesce(F.sum(F.when(F.col("bucket") == BIAS_BUCKET, F.col("w"))), F.lit(0))
+        .cast("bigint")
+        .alias("wb"),
     )
     sdot = (
         counts.join(F.broadcast(w), "bucket")

@@ -73,8 +73,10 @@ def _rowlocal_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     over negated cosines — exact same dot/cosine arithmetic as
     V.qdot/V.cosine (incl. the zero-norm → 0.0 convention); tie → min
     centroid_id, matching the window's ORDER BY desc(c_cos),
-    centroid_id. The _KMEANS_ARGMIN shape: no row explosion, no sort,
-    pure whole-stage codegen."""
+    centroid_id. The negation is ``0.0 - cos``, not ``-cos``, so a zero
+    cosine is +0.0 and ties the zero-norm branch's +0.0 bit for bit. The
+    _KMEANS_ARGMIN shape: no row explosion, no sort, pure whole-stage
+    codegen."""
     cents_row = cents.agg(
         F.sort_array(
             F.collect_list(
@@ -89,7 +91,7 @@ def _rowlocal_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     best = (
         "array_min(transform(cents, c -> struct("
         " CAST(CASE WHEN n2 > 0 AND c.cn2 > 0 THEN"
-        "   -(CAST(aggregate(zip_with(qvec, c.cv, (x, y) -> x * y),"
+        "   0.0 - (CAST(aggregate(zip_with(qvec, c.cv, (x, y) -> x * y),"
         "          CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)"
         "     / (sqrt(CAST(n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))))"
         "   ELSE 0.0 END AS DOUBLE) AS nv,"

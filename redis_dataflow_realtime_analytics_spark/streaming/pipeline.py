@@ -357,17 +357,16 @@ class SketchStoreWriter:
     * ``user_set_variant``    — (variant, user_id) distinct pairs     (W4, exact twin)
     * ``user_cms``            — (row_idx, bucket, cnt) count-min cells (heavy hitters)
 
-    Each family lands under ``store/<family>/batch_id=<n>`` via dynamic
-    partition overwrite — replaying a batch overwrites its own partition,
-    making the sink idempotent (effective exactly-once).
+    Each family lands under ``store/<family>/batch_id=<n>`` via a per-write
+    dynamic partition overwrite — replaying a batch overwrites its own
+    partition, making the sink idempotent (effective exactly-once), and
+    the session's ``partitionOverwriteMode`` is left as it was.
     """
 
     def __init__(self, store_dir: str):
         self.store_dir = store_dir
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         ev = batch_df.cache()
         try:
             families = {
@@ -387,6 +386,7 @@ class SketchStoreWriter:
                 (
                     df.withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
                     .parquet(f"{self.store_dir}/{family}")
                 )

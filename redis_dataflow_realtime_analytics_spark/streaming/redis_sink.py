@@ -10,7 +10,9 @@ reproduces those keys byte-for-byte so an existing dashboard
 but commands are emitted from **per-batch aggregates**, not per event:
 one INCRBY per (minute, batch) instead of one per event, and distinct
 (key, member) pairs for PFADD/SADD (idempotent, so at-least-once delivery
-to Redis stays correct).
+to Redis stays correct). All twelve legs come from one scan of the batch
+and one aggregate over the (method, key, member) commands each event
+emits — one shuffle, not one per leg.
 
 ``redis-py`` is optional (import-gated). Without it, commands append to a
 parquet command log — used by tests to assert exact key/command parity,
@@ -39,53 +41,54 @@ def _minute_key(prefix: str) -> F.Column:
 def metric_commands(events: DataFrame) -> DataFrame:
     """Normalized events → Redis command rows (method, key, member, delta).
 
-    One row per command; all twelve reference legs. Aggregated/distinct
-    map-side before any data leaves Spark.
-    """
-    cnt = (
-        events.groupBy(_minute_key("visitCounter").alias("key"))
-        .agg(F.count("*").alias("delta"))
-        .select(F.lit("INCRBY").alias("method"), "key", F.lit(None).cast("string").alias("member"), "delta")
-    )
-
-    def pairs(method: str, key: F.Column, member: F.Column) -> DataFrame:
-        return (
-            events.select(key.alias("key"), member.cast("string").alias("member"))
-            .distinct()
-            .select(
-                F.lit(method).alias("method"),
-                "key",
-                "member",
-                F.lit(None).cast("long").alias("delta"),
-            )
-        )
-
-    uid = F.col("user_id")
+    One row per command; all twelve reference legs from ONE scan and ONE
+    aggregate. The key encodes the dimensions and the method the
+    aggregate, so each event inlines its twelve (leg, method, key, member)
+    commands and a single ``groupBy`` collapses them: the row count is the
+    INCRBY delta for W1 and is dropped for the idempotent PFADD/SADD legs,
+    whose groups are the distinct (key, member) pairs. ``leg`` stays in the
+    grouping so two legs whose keys happen to coincide still emit one row
+    each, exactly as a union of per-leg distincts would."""
+    minute = F.date_format("ts", MINUTE_PATTERN)
+    uid, exp, var = F.col("user_id"), F.col("experiment_id"), F.col("variant")
     legs = [
-        cnt,  # W1
-        pairs(  # W2: evcounter_e_{exp}_v_{var}_{minute}
+        ("INCRBY", _minute_key("visitCounter"), F.lit(None)),  # W1
+        (  # W2: evcounter_e_{exp}_v_{var}_{minute}
             "PFADD",
-            F.concat(
-                F.lit("evcounter_e_"), "experiment_id", F.lit("_v_"), "variant",
-                F.lit("_"), F.date_format("ts", MINUTE_PATTERN),
-            ),
+            F.concat(F.lit("evcounter_e_"), exp, F.lit("_v_"), var, F.lit("_"), minute),
             uid,
         ),
-        pairs("PFADD", F.concat(F.lit("hll_var_"), "variant"), uid),       # W3
-        pairs("SADD", F.concat(F.lit("set_var_"), "variant"), uid),        # W4
-        pairs("PFADD", F.concat(F.lit("hll_exp_"), "experiment_id"), uid), # W5
-        pairs("SADD", F.concat(F.lit("set_exp_"), "experiment_id"), uid),  # W6
-        pairs("PFADD", _minute_key("hll_experiments_experiments"), F.col("experiment_id")),  # W7
-        pairs("SADD", _minute_key("set_experiments_experiments"), F.col("experiment_id")),   # W8
-        pairs("PFADD", _minute_key("hll_variants_variants"), F.col("variant")),  # W9
-        pairs("SADD", _minute_key("set_variants_variants"), F.col("variant")),   # W10
-        pairs("PFADD", _minute_key("hll_dthr"), uid),   # W11
-        pairs("SADD", _minute_key("set_dthr"), uid),    # W12
+        ("PFADD", F.concat(F.lit("hll_var_"), var), uid),   # W3
+        ("SADD", F.concat(F.lit("set_var_"), var), uid),    # W4
+        ("PFADD", F.concat(F.lit("hll_exp_"), exp), uid),   # W5
+        ("SADD", F.concat(F.lit("set_exp_"), exp), uid),    # W6
+        ("PFADD", _minute_key("hll_experiments_experiments"), exp),  # W7
+        ("SADD", _minute_key("set_experiments_experiments"), exp),   # W8
+        ("PFADD", _minute_key("hll_variants_variants"), var),  # W9
+        ("SADD", _minute_key("set_variants_variants"), var),   # W10
+        ("PFADD", _minute_key("hll_dthr"), uid),   # W11
+        ("SADD", _minute_key("set_dthr"), uid),    # W12
     ]
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    commands = F.array(*[
+        F.struct(
+            F.lit(i).alias("leg"),
+            F.lit(method).alias("method"),
+            key.alias("key"),
+            member.cast("string").alias("member"),
+        )
+        for i, (method, key, member) in enumerate(legs)
+    ])
+    return (
+        events.select(F.inline(commands))
+        .groupBy("leg", "method", "key", "member")
+        .agg(F.count("*").alias("n"))
+        .select(
+            "method",
+            "key",
+            "member",
+            F.when(F.col("method") == "INCRBY", F.col("n")).alias("delta"),
+        )
+    )
 
 
 class RedisMetricsSink:
@@ -122,6 +125,7 @@ class RedisMetricsSink:
                 (
                     cmds.withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
                     .parquet(self.log_dir)
                 )

@@ -1,28 +1,33 @@
 #!/usr/bin/env python3
-"""Per-query bench regression gate: compare two BENCH_r*.json files.
+"""Per-query bench regression gate: compare two bench records.
 
-The driver records one ``BENCH_r{N}.json`` per round; a plan regression
-(an AQE flip, a lost broadcast, a new shuffle) shows up as one query's
-time jumping while the rest hold. This script catches that BEFORE the
-driver runs: compare the current bench output against the previous
-round's committed artifact and alarm on any query slower than
-``THRESHOLD``x its old time (default 1.3, above the n=3 harness's noise
-band — observed round-over-round noise is ~±10%).
+A plan regression (an AQE flip, a lost broadcast, a new shuffle) shows up
+as one query's time jumping while the rest hold. This script catches that
+before the round's bench: it compares two records query by query and
+alarms on any query slower than ``THRESHOLD``x its old time (default 1.3,
+above the n=3 harness's noise band — observed round-over-round noise is
+~±10%).
+
+With no files it reads ``bench_history.jsonl`` (one line per ``bench.py``
+run) and compares the two newest records with the same ``cpus`` and
+``sf``: a record is only ever paired with one from the same core count and
+scale factor, since timings across them are not comparable.
 
 Usage:
-    python scripts/bench_check.py                    # newest two BENCH_r*.json
+    python scripts/bench_check.py                    # newest like-for-like pair in the history
+    python scripts/bench_check.py --history H.jsonl  # same, over another history file
     python scripts/bench_check.py OLD.json NEW.json  # explicit pair
     python scripts/bench_check.py --threshold 1.5 OLD.json NEW.json
 
-Exit code 1 if any shared query regressed past the threshold (CI-style).
-New queries (no old number) and removed queries are reported, never fatal.
+Exit code 1 if any shared query regressed past the threshold (CI-style),
+2 if there is nothing to compare. New queries (no old number) and removed
+queries are reported, never fatal.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import re
 import sys
 from pathlib import Path
 
@@ -40,31 +45,51 @@ def _load(path: Path) -> dict[str, float]:
     return parsed["queries"]
 
 
+def history_pair(path: Path) -> tuple[dict, dict] | None:
+    """The newest record of ``path`` that has an earlier record with the
+    same ``cpus`` and ``sf``, and the newest such earlier record."""
+    recs = [json.loads(line) for line in path.read_text().splitlines() if line.strip()]
+    recs = [r for r in recs if r.get("queries")]
+    for i in range(len(recs) - 1, 0, -1):
+        new = recs[i]
+        for old in reversed(recs[:i]):
+            if (old.get("cpus"), old.get("sf")) == (new.get("cpus"), new.get("sf")):
+                return old, new
+    return None
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("files", nargs="*", help="OLD.json NEW.json (default: newest two BENCH_r*.json)")
+    ap.add_argument("files", nargs="*", help="OLD.json NEW.json (default: the history)")
     ap.add_argument("--threshold", type=float, default=THRESHOLD)
+    ap.add_argument(
+        "--history",
+        type=Path,
+        default=Path(__file__).resolve().parent.parent / "bench_history.jsonl",
+    )
     args = ap.parse_args(argv)
 
-    root = Path(__file__).resolve().parent.parent
     if len(args.files) == 2:
         old_p, new_p = Path(args.files[0]), Path(args.files[1])
+        old, new = _load(old_p), _load(new_p)
+        label = f"{old_p.name} -> {new_p.name}"
     elif not args.files:
-        rounds = sorted(
-            root.glob("BENCH_r*.json"),
-            key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-        )
-        if len(rounds) < 2:
-            print("need at least two BENCH_r*.json files", file=sys.stderr)
+        pair = history_pair(args.history) if args.history.exists() else None
+        if pair is None:
+            print(f"{args.history}: no two records with the same cpus and sf", file=sys.stderr)
             return 2
-        old_p, new_p = rounds[-2], rounds[-1]
+        old_r, new_r = pair
+        old, new = old_r["queries"], new_r["queries"]
+        label = (
+            f"{args.history.name}: cpus={new_r.get('cpus')} sf={new_r.get('sf')}, "
+            f"ts {old_r.get('ts')} -> {new_r.get('ts')}"
+        )
     else:
         ap.error("pass exactly two files or none")
 
-    old, new = _load(old_p), _load(new_p)
     shared = sorted(set(old) & set(new))
     regressed = []
-    print(f"{old_p.name} -> {new_p.name}  (threshold {args.threshold}x)")
+    print(f"{label}  (threshold {args.threshold}x)")
     for k in shared:
         ratio = new[k] / old[k] if old[k] else float("inf")
         flag = " <-- REGRESSED" if ratio > args.threshold else ""

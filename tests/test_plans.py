@@ -52,6 +52,16 @@ def test_visits_single_shuffle(spark):
     assert plans.count_exchanges(df) <= 1, plans.plan_string(df)
 
 
+def test_metric_commands_single_shuffle(spark):
+    """All twelve Redis write legs come from one scan and one aggregate;
+    a per-leg union would plan one exchange per leg."""
+    from redis_dataflow_realtime_analytics_spark.streaming.redis_sink import metric_commands
+
+    ev = normalize_events(read_events(spark, SF_SMOKE))
+    df = metric_commands(ev)
+    assert plans.count_exchanges(df) == 1, plans.plan_string(df)
+
+
 def test_events_scan_prunes_columns(spark):
     ev = normalize_events(read_events(spark, SF_SMOKE))
     df = metrics.uniques_per_minute(ev)

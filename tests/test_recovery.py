@@ -193,6 +193,30 @@ def test_sketch_store_crash_after_write_is_exactly_once(spark, tmp_path):
     assert batch_ids == {f"batch_id={i}" for i in range(5)}
 
 
+def test_sketch_store_keeps_session_conf_and_replaces_only_its_batch(spark, tmp_path):
+    """The store's dynamic partition overwrite is a per-write option: the
+    shared session's ``partitionOverwriteMode`` stays STATIC, and a
+    replayed batch id still rewrites only its own partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    assert spark.conf.get(key).upper() == "STATIC"
+    ev = normalize_events(read_events(spark, SF))
+    store = str(tmp_path / "store")
+    writer = sp.SketchStoreWriter(store)
+    writer(ev.limit(100), 0)
+    assert spark.conf.get(key).upper() == "STATIC"
+    writer(ev.limit(50), 1)
+    writer(ev.limit(20), 1)  # replay of batch 1 with different content
+    assert spark.conf.get(key).upper() == "STATIC"
+    per_batch = {
+        r["batch_id"]: r["n"]
+        for r in spark.read.parquet(f"{store}/visits")
+        .groupBy("batch_id")
+        .agg(F.sum("visits").alias("n"))
+        .collect()
+    }
+    assert per_batch == {0: 100, 1: 20}
+
+
 def test_ingest_dedup_crash_replay_appends_nothing(spark, tmp_path):
     replay = sp._chunked_docs_replay_dir(DOCS, 4)
     schema = spark.read.parquet(DOCS).schema

@@ -48,13 +48,23 @@ def test_methods_per_family(spark):
 
 
 def test_command_log_fallback(spark, tmp_path):
-    ev = normalize_events(read_events(spark, SF_SMOKE)).limit(100)
+    """The log is partitioned by batch: a replayed batch id replaces its
+    own partition and leaves the other batches in place."""
+    ev = normalize_events(read_events(spark, SF_SMOKE))
     sink = RedisMetricsSink(log_dir=str(tmp_path / "cmdlog"))
-    sink(ev, batch_id=0)
+    sink(ev.limit(100), batch_id=0)
+    sink(ev.limit(50), batch_id=1)
+    sink(ev.limit(20), batch_id=1)  # replay of batch 1 with different content
     log = spark.read.parquet(str(tmp_path / "cmdlog"))
-    assert log.where(F.col("method") == "INCRBY").count() > 0
     assert log.where(F.col("method") == "PFADD").count() > 0
-    assert {r.batch_id for r in log.select("batch_id").distinct().collect()} == {0}
+    visits = {
+        r["batch_id"]: r["n"]
+        for r in log.where(F.col("method") == "INCRBY")
+        .groupBy("batch_id")
+        .agg(F.sum("delta").alias("n"))
+        .collect()
+    }
+    assert visits == {0: 100, 1: 20}
 
 
 # ---------------------------------------------------------------------------

@@ -220,6 +220,27 @@ def test_perceptron_model_consistent_with_scores(spark):
     assert scored.exceptAll(rederived).count() == 0
 
 
+def test_perceptron_scores_without_bias_row(spark):
+    """A weight frame with no bias row scores every document with a zero
+    bias, instead of crossJoining an empty bias frame into zero rows."""
+    from redis_dataflow_realtime_analytics_spark.operators import classifier
+
+    w = classifier.perceptron_model(spark, SF_SMOKE, rounds=2)
+    wb = w.where(F.col("bucket") == classifier.BIAS_BUCKET).first()["w"]
+    no_bias = w.where(F.col("bucket") != classifier.BIAS_BUCKET)
+    counts, stats, y = classifier._sparse_train_inputs(spark, SF_SMOKE)
+    with_bias = {
+        r.doc_id: r.margin
+        for r in classifier._sparse_margins(y, counts, w, stats).collect()
+    }
+    without = {
+        r.doc_id: r.margin
+        for r in classifier._sparse_margins(y, counts, no_bias, stats).collect()
+    }
+    assert len(without) == y.count() > 0
+    assert without == {d: m - wb for d, m in with_bias.items()}
+
+
 def test_version_diff_accounts_for_every_document(spark):
     """The three classes partition the history's doc set and the
     'added' class matches the discovered-doc synthesis rule."""

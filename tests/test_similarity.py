@@ -297,3 +297,35 @@ def test_truncation_recall_monotone_and_bounded(spark):
         assert 0.0 <= r.recall <= 1.0 and r.n_queries > 0, r
         assert r.recall >= last - 1e-9, (d, r.recall, last)
         last = r.recall
+
+
+def test_rowlocal_assign_zero_cosine_ties_zero_norm_centroid(spark):
+    """A zero cosine and a zero-norm centroid both score 0.0 and tie on
+    the min centroid_id, as the window's ORDER BY desc(cosine),
+    centroid_id does: centroid 0 is the zero vector, centroid 1 is
+    orthogonal to query 0, centroid 2 points away from it."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from redis_dataflow_realtime_analytics_spark.functions import vectors as V
+
+    emb = spark.createDataFrame(
+        [(0, [1, 0], 1), (1, [0, 2], 4), (2, [0, 0], 0)],
+        "vec_id int, qvec array<bigint>, n2 bigint",
+    )
+    cents = spark.createDataFrame(
+        [(0, [0, 0], 0), (1, [0, 1], 1), (2, [-1, 0], 1)],
+        "centroid_id int, c_qvec array<bigint>, c_n2 bigint",
+    )
+    got = {r.vec_id: r.bucket for r in similarity._rowlocal_assign(emb, cents).collect()}
+    w = Window.partitionBy("vec_id").orderBy(F.desc("c_cos"), "centroid_id")
+    window = {
+        r.vec_id: r.centroid_id
+        for r in emb.crossJoin(cents)
+        .withColumn("dot", V.qdot("qvec", "c_qvec"))
+        .withColumn("c_cos", V.cosine("dot", "n2", "c_n2"))
+        .withColumn("rank", F.row_number().over(w))
+        .where("rank = 1")
+        .collect()
+    }
+    assert got == window == {0: 0, 1: 1, 2: 0}
